@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * generated cc_pages corpus (the testdata documents table is too small
   * to measure throughput — 5k rows at sf0.1).
   *
-  * Prints ONE JSON line: {"metric","value","unit","queries","sf"}.
-  * The queries map carries per-query seconds plus derived `*_docs_per_s`
-  * throughput entries for the headline runs.
+  * Prints two JSON lines {"metric","value","unit","queries","sf"}: the
+  * full one, then a summary over the fixed [[SummaryKeys]] that stays
+  * the last stdout line. The queries map carries per-query seconds plus
+  * derived `*_docs_per_s` throughput entries for the headline runs.
   */
 object Bench {
 
@@ -114,27 +115,48 @@ object Bench {
 
     val total = results.filter(_._1.endsWith("_sec")).values.sum +
       results.filterNot(k => k._1.endsWith("_sec") || k._1.endsWith("_per_s")).values.filter(_ > 0).sum
-    def json(entries: Seq[(String, Double)]): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    }
     // full per-query line first (for the log / post-hoc reads), then a
     // SUMMARY line sized for the driver's 2000-char stdout tail window
     // — the full line outgrew that window at round 3 and every
     // BENCH_r{2,3,4}.json carries "parsed": null because of it; the
     // last printed line must be complete valid JSON inside the tail
-    println(json(results.toSeq))
+    val full = json(total, sfDir, results.toSeq)
+    println(full)
     // per-run file (sf + pid suffix) so concurrent benches never clobber
     val fullPath = s"/tmp/graft_bench_full_${new java.io.File(sfDir).getName}_${ProcessHandle.current.pid}.json"
-    java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
-      json(results.toSeq).getBytes("UTF-8"))
-    val headline = results.toSeq.filter { case (k, _) =>
-      k.endsWith("_per_s") || k.endsWith("_sec") }
-    val slowest = results.toSeq
-      .filterNot { case (k, _) => k.endsWith("_per_s") || k.endsWith("_sec") }
-      .sortBy(-_._2).take(18)
-    val omitted = results.size - headline.size - slowest.size
-    println(json((headline ++ slowest.sortBy(_._1)) :+ ("queries_omitted_fast" -> omitted.toDouble)))
+    java.nio.file.Files.write(java.nio.file.Paths.get(fullPath), full.getBytes("UTF-8"))
+    println(summaryLine(total, sfDir, results))
     spark.stop()
   }
+
+  private def json(total: Double, sfDir: String, entries: Seq[(String, Double)]): String = {
+    val qs = entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+  }
+
+  /** Keys of the summary line, fixed so every run reports the same set
+    * whatever its timings: the headline throughputs, then every catalog
+    * entry parsed from the committed round-6 and round-7 summaries.
+    */
+  private[graft] val SummaryKeys: Seq[String] = Seq(
+    "curate_full_sec", "curate_full_docs_per_s", "cascade_sec", "cascade_docs_per_s",
+    "dedup_exact_sec", "dedup_exact_docs_per_s", "config_non_en_sec", "config_non_en_docs_per_s",
+    "minhash_sig_20k_sec", "minhash_docs_per_s",
+    "aegis_classifier", "arxiv_extract", "cf_fertility", "cf_xml_header", "config_cascade_en",
+    "dedup_exact_ids", "dedup_exact_kept", "dedup_incremental_exact", "dedup_incremental_ids",
+    "dedup_jaccard_pairs", "dedup_minhash_ids", "dedup_simhash_pairs", "domain_classifier",
+    "emb_artifact_neardup", "emb_neardup", "emb_text_neardup", "ft_langid", "ft_quality",
+    "hf_boilerplate", "hf_mean_word_length", "image_scoring", "ivf_topk", "knn_brute",
+    "lm_perplexity", "lm_ppl_gate", "megatron_roundtrip", "q1_agg", "q2_join", "q3_topk",
+    "q4_window", "q5_antijoin", "q6_events_window", "q8_sessionize", "semantic_dedup_ids",
+    "split_rechunk", "video_fixed_stride", "video_frame_extraction", "video_probe",
+    "video_scene_clips", "wiki_extract")
+
+  /** The last stdout line: [[SummaryKeys]] in order (-1 for a key the run
+    * lacks, as for a failed entry) and the count of entries left out.
+    */
+  private[graft] def summaryLine(total: Double, sfDir: String,
+                                 results: scala.collection.Map[String, Double]): String =
+    json(total, sfDir, SummaryKeys.map(k => k -> results.getOrElse(k, -1.0)) :+
+      ("queries_omitted_fast" -> (results.keySet -- SummaryKeys).size.toDouble))
 }

@@ -17,11 +17,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   */
 object BenchExtra {
 
-  def main(args: Array[String]): Unit = args(0) match {
+  def main(args: Array[String]): Unit = args.headOption.getOrElse("") match {
     case "micro" => micro(args(1), if (args.length > 2) args(2).toInt else 20000)
     case "query" => query(args(1), args.drop(2), noop = false)
     case "noop"  => query(args(1), args.drop(2), noop = true)
     case "plan"  => plan(args(1), args(2), args.drop(3))
+    case _ => Console.err.println(
+      "usage: BenchExtra micro <corpusParquet> [n] | query <sfDir> <name...> | " +
+        "noop <sfDir> <name...> | plan <sfDir> <outDir> <name...>")
   }
 
   /** Dump .explain("formatted") of catalog entries to <outDir>/<name>.txt
@@ -54,13 +57,17 @@ object BenchExtra {
     spark
   }
 
+  /** Mean length in chars; 0 for an empty corpus. */
+  private[graft] def avgLength(texts: scala.collection.Seq[String]): Long =
+    texts.map(_.length.toLong).sum / math.max(1, texts.length)
+
   // ---------------- per-row component micro ----------------
   private def micro(corpus: String, n: Int): Unit = {
     val spark = session()
     val texts = spark.read.parquet(corpus).select("text").limit(n)
       .collect().map(_.getString(0))
     spark.stop()
-    println(s"[micro] ${texts.length} docs, avg len ${texts.map(_.length).sum / texts.length}")
+    println(s"[micro] ${texts.length} docs, avg len ${avgLength(texts)}")
 
     def time(label: String)(f: String => Any): Unit = {
       // warmup pass then two timed passes; report best (C2 ramp)

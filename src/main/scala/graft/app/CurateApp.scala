@@ -15,9 +15,13 @@ import graft.pipeline.CurationPipeline
   *   - input: Iceberg table of cc pages (here: parquet path; all table
   *     access isolated behind TableIO so the Iceberg runtime jar swap is
   *     a one-liner)
-  *   - work splits into `unitBuckets` url-hash units; each unit's output
-  *     commits atomically with a lineage row (unit, rows) — a killed run
-  *     resumes processing only uncommitted units
+  *   - work splits into `unitBuckets` url-hash units, all pending ones
+  *     curated in one scan and one write job; each unit then commits on
+  *     its own with a lineage row (unit, rows). A run killed inside the
+  *     job redoes its claimed units; a rerun skips committed ones. A
+  *     second live driver finds every unit claimed and exits 3. The
+  *     curation step is row-wise and keeps columns it does not know,
+  *     as runCheckpointed's `process` must
   *   - output partitioned by (lang) — days(warc_ts) too when the column
   *     exists — so downstream training-data reads prune partitions
   *   - kept docs carry scrubbed text; dropped docs are not shipped
@@ -47,7 +51,7 @@ object CurateApp {
 
     // Checkpoint the SCORED table (all rows, keep flag, first_reject;
     // dropped rows ship no text) — the expensive curation UDF runs
-    // exactly once per unit, and kept-view + per-filter metrics both
+    // exactly once per row, and kept-view + per-filter metrics both
     // derive from the written columns (column-pruned re-reads, no
     // second scoring pass — SURVEY.md §4 checkpoint design). Output is
     // lang-partitioned inside each unit (the manifest-parquet stand-in

@@ -379,6 +379,7 @@ object HeuristicFilters {
         if (c > bestCount) { bestCount = c; bestPos = i }
         i += 1
       }
+      counts.release()
       val sb = new java.lang.StringBuilder()
       var j = 0
       while (j < n) {
@@ -436,6 +437,7 @@ object HeuristicFilters {
         overlapping = math.max(overlapping - 1, 0)
         i += 1
       }
+      counts.release()
       val nchar = PyText.len(text)
       if (nchar == 0) return 1.0
       duplicatedNchar.toDouble / nchar
@@ -449,21 +451,25 @@ object HeuristicFilters {
     * per-window allocation. counts==0 marks an empty slot; reset only
     * zeroes the capacity a document needs.
     */
-  private final class NGramCounter {
-    private var keys1 = new Array[Long](1 << 11)
-    private var keys2 = new Array[Long](1 << 11)
-    private var counts = new Array[Int](1 << 11)
-    private var mask = (1 << 11) - 1
-    def reset(capacity: Int): Unit = {
-      var cap = 1 << 11
-      while (cap < capacity * 2) cap <<= 1
-      if (keys1.length < cap) {
-        keys1 = new Array[Long](cap)
-        keys2 = new Array[Long](cap)
-        counts = new Array[Int](cap)
-      }
+  private[filters] final class NGramCounter {
+    private var keys1 = new Array[Long](DefaultNGramCap)
+    private var keys2 = new Array[Long](DefaultNGramCap)
+    private var counts = new Array[Int](DefaultNGramCap)
+    private var mask = DefaultNGramCap - 1
+    def capacity: Int = keys1.length
+    def reset(windows: Int): Unit = {
+      val cap = ngramTableCap(windows)
+      if (keys1.length < cap) resize(cap)
       mask = cap - 1
       java.util.Arrays.fill(counts, 0, cap, 0)
+    }
+    /** Drops a table grown past [[MaxRetainedNGramCap]] for an oversized
+      * doc, so a thread does not pin it for the JVM's lifetime. */
+    def release(): Unit = if (keys1.length > MaxRetainedNGramCap) resize(DefaultNGramCap)
+    private def resize(cap: Int): Unit = {
+      keys1 = new Array[Long](cap)
+      keys2 = new Array[Long](cap)
+      counts = new Array[Int](cap)
     }
     /** Increment the count of (h1, h2); returns the new count. */
     def inc(h1: Long, h2: Long): Int = {
@@ -485,14 +491,26 @@ object HeuristicFilters {
     }
   }
 
-  /** Tables beyond this capacity are not retained per thread. */
-  private val MaxRetainedNGramCap = 1 << 20
+  private val DefaultNGramCap = 1 << 11
+  /** Tables beyond this capacity (~1.3 MB) are shrunk back after use. */
+  private[filters] val MaxRetainedNGramCap = 1 << 16
 
-  private val ngramScratch: ThreadLocal[NGramCounter] =
+  /** Power-of-two table size at most half full for `windows` keys. Long
+    * arithmetic: an Int `windows * 2` past 2^30 went negative and left a
+    * 2048-slot table to probe forever. */
+  private[filters] def ngramTableCap(windows: Int): Int = {
+    var cap = DefaultNGramCap.toLong
+    while (cap < windows.toLong * 2) cap <<= 1
+    require(cap <= (1 << 30), s"$windows n-gram windows exceed the largest counter table")
+    cap.toInt
+  }
+
+  private[filters] val ngramScratch: ThreadLocal[NGramCounter] =
     ThreadLocal.withInitial(() => new NGramCounter)
 
+  /** The thread's counter, reset for `windows` keys; call `release()` after use. */
   private def ngramCounter(windows: Int): NGramCounter = {
-    val c = if (windows * 2 > MaxRetainedNGramCap) new NGramCounter else ngramScratch.get()
+    val c = ngramScratch.get()
     c.reset(windows)
     c
   }

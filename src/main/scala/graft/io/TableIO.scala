@@ -85,72 +85,72 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
   }
 
   /** Checkpointed per-unit run: split the input by a unit column (e.g. a
-    * bucketed hash of url, or days(warc_ts)), skip committed units,
-    * process and commit the rest one unit at a time. Exact resume: a
-    * killed run reprocesses only uncommitted units and the final output
-    * equals a single-run output. `partitionCols` adds hive-style output
-    * partitioning inside each unit (e.g. lang) so downstream reads prune.
+    * bucketed hash of url, or days(warc_ts)), skip committed units and
+    * process the rest in ONE job writing `<table>/<unitCol>=<u>/` (plus
+    * `partitionCols` leaves, e.g. lang, so reads prune) with dynamic
+    * partition overwrite. Each unit still commits on its own: after the
+    * job lands, one `unit_commit` line per unit (rows observed on the
+    * write job) is appended in sorted order and its claim released. A run
+    * killed inside the job commits nothing and its rerun redoes the units
+    * it had claimed; the final output equals a single-run output.
     *
-    * Concurrent drivers: single-writer is the manifest impl's contract
-    * (the Iceberg CatalogTableIO path commits atomic snapshots and is
-    * the answer for genuinely concurrent drivers) — but a live kill/rerun
-    * drill showed what happens when a second driver DOES share the root
-    * (zombie JVM surviving a botched kill, retry scheduler, operator
-    * error): a committed-set re-check alone is check-then-act and both
-    * drivers walked the same unit list, double-committing 10/64 units
-    * and tearing an Overwrite ("Unable to clear output directory …
-    * _temporary still exists" when one driver cleared the dir the other
-    * was writing). Units are therefore claimed via an atomic lock file
-    * (`fs.create(overwrite=false)` — atomic on local FS and HDFS;
-    * advisory only on S3) holding `pid@host`. A claim found held by a
-    * DEAD pid on the same host is broken (exact resume after SIGKILL
-    * needs no lease timers); a claim held by a live or unverifiable
-    * owner is skipped and reported — two live drivers partition the
-    * units between them instead of racing.
+    * `process` runs once, on the claimed rows, which carry their unit in
+    * the reserved column [[UnitTag]] (it may drop `unitCol`). It must be
+    * row-wise and keep columns it does not know; dropping the tag fails.
+    *
+    * Concurrent drivers (a live drill's zombie JVM double-committed units
+    * before claims existed): units are claimed up front via an atomic
+    * lock file holding `pid@host`. A DEAD pid's claim on this host is
+    * broken (exact SIGKILL resume); a live or unverifiable owner's is
+    * skipped and reported, so a second live driver finds every unit the
+    * first claimed and leaves them alone.
     *
     * @return units left uncommitted because another live driver holds
-    *         them (empty on any single-driver run, including reruns
-    *         after a crash)
+    *         them (empty on any single-driver run, including reruns)
     */
   def runCheckpointed(df: DataFrame, unitCol: String, table: String,
                       partitionCols: Seq[String] = Nil)
                      (process: DataFrame => DataFrame): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val done = committedUnits(table)
-    val units = df.select(unitCol).distinct().collect().map(_.get(0).toString).sorted
-    val skipped = scala.collection.mutable.ListBuffer.empty[String]
-    for (u <- units if !done.contains(u)) {
-      // the startup snapshot `done` goes stale if another driver commits;
-      // re-read the manifest right before claiming (one tiny read/unit)
-      if (!committedUnits(table).contains(u)) {
-        if (!tryClaimUnit(fs, table, u)) skipped += u
-        // post-claim re-check: another driver may have committed u and
-        // released its lock between our manifest read and our claim (the
-        // commit manifest line is appended BEFORE the lock is deleted,
-        // so claim-then-recheck cannot miss it) — without this, that
-        // window reprocessed the unit and duplicated its manifest line
-        else if (committedUnits(table).contains(u)) fs.delete(unitLockPath(table, u), false)
-        else try {
-          val part = process(df.filter(col(unitCol) === u))
-          // row count observed on the write job itself — no output re-read,
-          // and a fully-filtered unit reports rows=0 naturally (the old
-          // read-back threw on the _SUCCESS-only directory such units leave)
-          val obs = org.apache.spark.sql.Observation()
-          val w = part.observe(obs, count(lit(1)).as("rows")).write.mode(SaveMode.Overwrite)
-          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-            .parquet(s"${path(table)}/unit=$u")
-          appendManifest(table, s"""{"event":"unit_commit","table":"$table","unit":"$u","rows":${obs.get("rows")}}""")
-        } finally fs.delete(unitLockPath(table, u), false)
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val unit = col(unitCol).cast("string")
+    val pending = df.select(unit).distinct().collect().map(_.getString(0)).filterNot(committedUnits(table)).sorted.toSeq
+    val (won, skipped) = pending.partition(tryClaimUnit(fs, table, _))
+    val held = scala.collection.mutable.LinkedHashSet(won: _*)
+    def release(u: String): Unit = if (held.remove(u)) fs.delete(unitLockPath(table, u), false)
+    try {
+      // another driver may have committed a unit and released it before
+      // our claim; its commit line precedes its unlock, so this sees it
+      committedUnits(table).foreach(release)
+      val claimed = held.toSeq
+      if (claimed.nonEmpty) {
+        // a run killed mid-job may have left a claimed unit's directory;
+        // dynamic overwrite replaces only the leaves this job writes
+        claimed.foreach(u => fs.delete(new org.apache.hadoop.fs.Path(path(table),
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString(unitCol, u)), true))
+        val part = process(df.filter(unit.isin(claimed: _*)).withColumn(UnitTag, unit))
+        require(part.columns.contains(UnitTag), s"runCheckpointed($table): process dropped the reserved " +
+          s"column '$UnitTag'; it must keep columns it does not know")
+        val obs = org.apache.spark.sql.Observation()
+        val rows = claimed.map(u => count_if(col(unitCol) === u).as(s"rows_$u"))
+        part.drop(unitCol).withColumnRenamed(UnitTag, unitCol).observe(obs, rows.head, rows.tail: _*)
+          .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+          .partitionBy(unitCol +: partitionCols: _*).parquet(path(table))
+        for (u <- claimed) {
+          appendManifest(table, s"""{"event":"unit_commit","table":"$table","unit":"$u","rows":${obs.get(s"rows_$u")}}""")
+          release(u)
+        }
       }
-    }
-    val leftover = skipped.toList.filterNot(committedUnits(table).contains)
+    } finally held.toSeq.foreach(release)
+    val leftover = skipped.filterNot(committedUnits(table).contains)
     if (leftover.nonEmpty)
       System.err.println(s"[resume] ${leftover.size} unit(s) of '$table' held by another live driver " +
         s"and still uncommitted: ${leftover.take(10).mkString(",")}${if (leftover.size > 10) ",…" else ""} — " +
         "rerun after it finishes (or clear stale locks under " + s"${path(table)}/_unit_locks)")
     leftover
   }
+
+  /** Column carrying each row's unit through `runCheckpointed`'s `process`. */
+  val UnitTag = "__graft_unit"
 
   // underscore-prefixed so Spark/Hadoop input listing ignores the dir
   private def unitLockPath(table: String, u: String) =
@@ -191,7 +191,7 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
           // be checked across hosts, so a driver that crashed on ANOTHER
           // node would otherwise block resume forever; the opt-in lease
           // (-Dgraft.resume.lockLeaseMs=N) breaks locks older than N ms —
-          // set it above any plausible single-unit processing time
+          // set it above any plausible run's processing time
           val lease = sys.props.get("graft.resume.lockLeaseMs").map(_.toLong)
           val expired = lease.exists { ms =>
             try System.currentTimeMillis() - fs.getFileStatus(p).getModificationTime > ms

@@ -173,4 +173,30 @@ class HeuristicFilterUnitSpec extends AnyFunSuite {
     assert(names.indexOf("repeating_top_2grams") == 18)
     assert(names.indexOf("repeating_dup_10gram") == 26)
   }
+
+  test("n-gram counter table size is computed without Int overflow") {
+    assert(HF.ngramTableCap(0) == 2048)
+    assert(HF.ngramTableCap(1024) == 2048)
+    assert(HF.ngramTableCap(1025) == 4096)
+    assert(HF.ngramTableCap(1 << 29) == (1 << 30))
+    // `windows * 2` in Int arithmetic went negative here and sized 2048 slots
+    intercept[IllegalArgumentException](HF.ngramTableCap(1 << 30))
+    intercept[IllegalArgumentException](HF.ngramTableCap(Int.MaxValue))
+  }
+
+  test("the thread's n-gram counter shrinks back after an oversized doc") {
+    def words(n: Int) = (0 until n).map(i => s"w${i % 5000}").mkString(" ")
+    val retained = words(HF.MaxRetainedNGramCap / 4) // table of MaxRetainedNGramCap / 2
+    val oversized = words(HF.MaxRetainedNGramCap)    // table of 2 * MaxRetainedNGramCap
+    val f = HF.RepeatingDuplicateNGrams(5, 0.15)
+    val g = HF.RepeatingTopNGrams(2, 0.2)
+    val small = Seq(f.score(retained), g.score(retained))
+    assert(HF.ngramScratch.get().capacity == HF.MaxRetainedNGramCap / 2)
+    val big = Seq(f.score(oversized), g.score(oversized))
+    assert(HF.ngramScratch.get().capacity == 2048)
+    // the shrunk table still counts correctly on the next docs
+    assert(Seq(f.score(retained), g.score(retained)) == small)
+    assert(Seq(f.score(oversized), g.score(oversized)) == big)
+    assert(big.head > 0.9) // words repeat every 5000: nearly every 5-gram is a duplicate
+  }
 }
